@@ -157,11 +157,19 @@ def minhash_band_hashes(df: DataFrame, id_col: str, text_col: str = "text",
                         shingle: str = "token") -> DataFrame:
     """(_id, band, bh) band hashes from the map-only signature: band b's
     hash = xxhash64 over its ``num_perm/bands`` signature slots."""
-    rows = num_perm // bands
     sigd = df.select(F.col(id_col).alias("_id"),
                      minhash_signature(text_col, num_perm, shingle_n, seed,
                                        shingle)
                      .alias("_sig"))
+    return sig_band_hashes(sigd, "_id", num_perm, bands)
+
+
+def sig_band_hashes(sigd: DataFrame, id_col: str, num_perm: int = 32,
+                    bands: int = 8) -> DataFrame:
+    """(id_col, band, bh) band hashes of a precomputed ``_sig`` column —
+    the banding half of :func:`minhash_band_hashes`, for callers that
+    computed the signature once and read it several times."""
+    rows = num_perm // bands
     # One selectExpr instead of ~8 band structs built as Column objects:
     # the Column form cost ~64 py4j round-trips (~0.3s driver time) per
     # call, re-paid by every LSH query, index build/append and classify
@@ -173,8 +181,8 @@ def minhash_band_hashes(df: DataFrame, id_col: str, text_col: str = "text",
         % (b, ",".join(f"element_at(_sig,{b * rows + r + 1})"
                        for r in range(rows)))
         for b in range(bands))
-    return (sigd.selectExpr("_id", f"explode(array({arr})) as e")
-                .select("_id", "e.band", "e.bh"))
+    return (sigd.selectExpr(f"`{id_col}`", f"explode(array({arr})) as e")
+                .select(id_col, "e.band", "e.bh"))
 
 
 def minhash_lsh_candidates(df: DataFrame, id_col: str, text_col: str = "text",
@@ -209,17 +217,22 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str, text_col: str = "text",
     # run and served runs 2–3 of the median — see OPTIMIZATION_r16.md.)
     banded = banded.persist()
     try:
-        a = banded.alias("a")
-        b = banded.alias("b")
-        return (a.join(b, [F.col("a.band") == F.col("b.band"),
-                           F.col("a.bh") == F.col("b.bh"),
-                           F.col("a._id") < F.col("b._id")])
-                 .select(F.col("a._id").alias("id_a"),
-                         F.col("b._id").alias("id_b"))
-                 .distinct()
-                 .localCheckpoint(eager=True))
+        return bucket_pairs(banded, "_id").localCheckpoint(eager=True)
     finally:
         banded.unpersist()
+
+
+def bucket_pairs(banded: DataFrame, id_col: str) -> DataFrame:
+    """Distinct (id_a, id_b), id_a < id_b, of the rows of ``(id_col, band,
+    bh)`` band hashes that share a bucket — the lazy LSH self-join."""
+    a = banded.alias("a")
+    b = banded.alias("b")
+    return (a.join(b, [F.col("a.band") == F.col("b.band"),
+                       F.col("a.bh") == F.col("b.bh"),
+                       F.col(f"a.{id_col}") < F.col(f"b.{id_col}")])
+             .select(F.col(f"a.{id_col}").alias("id_a"),
+                     F.col(f"b.{id_col}").alias("id_b"))
+             .distinct())
 
 
 def jaccard_pd(text_a, text_b, shingle_n: int = 3,

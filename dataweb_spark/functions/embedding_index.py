@@ -34,7 +34,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dataweb_spark.functions.dedup_index import (_concurrent_writes,
@@ -162,7 +162,6 @@ def _classify_embedding_plan(spark: SparkSession, new_batch: DataFrame,
                     F.col("_nv").cast("array<double>"),
                     F.col("_cv").cast("array<double>")))
                 .where(F.col("_cos") >= threshold))
-    from pyspark.sql import Window
     w = Window.partitionBy("_nid").orderBy(F.desc("_cos"),
                                            F.asc("_cid"))
     near = (verified.withColumn("_rn", F.row_number().over(w))

@@ -317,12 +317,8 @@ def test_batch_side_broadcast_index_side_streams(spark, tmp_path,
     corpus, batch = corpus_and_batch
     idx = str(tmp_path / "idx")
     build_dedup_index(corpus, idx)
-    lazy, caches = _classify_plan(spark, batch, idx, corpus, 0.7)
-    try:
-        plan = lazy._jdf.queryExecution().executedPlan().toString()
-    finally:
-        for df in caches:
-            df.unpersist()
+    lazy = _classify_plan(spark, batch, idx, corpus, 0.7)
+    plan = lazy._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastExchange" in plan  # batch/candidate sides broadcast
 
 
@@ -493,3 +489,163 @@ def test_index_ops_release_sql_caches(spark, tmp_path, corpus_and_batch):
     assert cm.isEmpty(), "classify_against_index leaked a SQL cache"
     ingest_batch(spark, batch, idx, corp)
     assert cm.isEmpty(), "ingest_batch leaked a SQL cache"
+
+
+def _drain(spark, landing, idx, corp_dir, ck, **kw):
+    """Run the gate over ``landing`` (one file per micro-batch) to the
+    end; returns the finished query (its failure, if any, is raised)."""
+    from dataweb_spark.functions.dedup_index import streaming_ingest_gate
+
+    stream = (spark.readStream.schema("doc_id long, text string")
+              .option("maxFilesPerTrigger", 1).parquet(landing))
+    q = streaming_ingest_gate(stream, idx, corp_dir, ck, **kw)
+    assert q.awaitTermination(300), "gate drain did not finish"
+    return q
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+# Near-dup pair (shingle Jaccard 0.93) whose 8-perm/2-band LSH buckets
+# meet under seed 7 but not under the default seed 11.
+_SEEDED_BASE = ("willow zephyr amber nectar juniper birch juniper amber iris "
+                "yarrow heron ember pebble russet ember sable birch yarrow "
+                "fjord ember sable cobalt nectar birch sable dune birch sable "
+                "umber juniper amber russet cobalt onyx thistle iris kestrel "
+                "fjord pebble vesper")
+
+
+def test_gate_collapse_uses_index_seed(spark, tmp_path, corpus_and_batch):
+    """The within-batch near collapse signs under the INDEX's seed: a pair
+    that only the index seed buckets together collapses to its lower id
+    (a collapse under the default seed would admit both)."""
+    corpus, _ = corpus_and_batch
+    idx, corp_dir = str(tmp_path / "idx"), str(tmp_path / "corpus")
+    landing, ck = str(tmp_path / "landing"), str(tmp_path / "ck")
+    build_dedup_index(corpus, idx, num_perm=8, bands=2, seed=7)
+    corpus.write.parquet(corp_dir)
+    spark.createDataFrame(
+        [(801, _SEEDED_BASE), (802, _SEEDED_BASE + " umber thistle onyx")],
+        ["doc_id", "text"]).coalesce(1).write.parquet(landing)
+    _drain(spark, landing, idx, corp_dir, ck)
+    got = {r["doc_id"] for r in
+           spark.read.parquet(corp_dir).where("doc_id >= 800").collect()}
+    assert got == {801}
+
+
+def _gate_batch(spark):
+    """Exact and near dups of the fixture corpus, two novel docs, and an
+    exact copy and a near variant of a novel doc inside the batch."""
+    novel = ("fresh ingest text about lineage free staging of admit "
+             "decisions with enough tokens for a stable shingle set")
+    return spark.createDataFrame(
+        [(901, "the quick brown fox jumps over the lazy dog near the river"),
+         (902, "pack my box with five dozen liquor jugs for the big party"),
+         (903, novel),
+         (904, novel),
+         (905, novel + " plus a tail"),
+         (906, "another unrelated novel document about compaction swaps")],
+        ["doc_id", "text"])
+
+
+def test_gate_index_rows_match_rebuild(spark, tmp_path, corpus_and_batch):
+    """The fp and band rows the gate appends for admitted docs equal, row
+    for row, what build_dedup_index writes for the same docs, and the
+    corpus keeps exactly the input schema (no signing column leaks)."""
+    corpus, _ = corpus_and_batch
+    idx, corp_dir = str(tmp_path / "idx"), str(tmp_path / "corpus")
+    landing, ck = str(tmp_path / "landing"), str(tmp_path / "ck")
+    build_dedup_index(corpus, idx)
+    corpus.write.parquet(corp_dir)
+    _gate_batch(spark).coalesce(1).write.parquet(landing)
+    _drain(spark, landing, idx, corp_dir, ck)
+
+    after = spark.read.parquet(corp_dir)
+    assert after.schema == spark.read.parquet(landing).schema
+    admitted = after.where("doc_id >= 900")
+    assert {r["doc_id"] for r in admitted.collect()} == {903, 906}
+    ref = str(tmp_path / "ref")
+    build_dedup_index(admitted, ref)
+    for table in ("fp", "bands"):
+        gate_rows = spark.read.parquet(f"{idx}/{table}").where("id >= 900")
+        assert _rows(gate_rows) == _rows(spark.read.parquet(f"{ref}/{table}"))
+
+
+def _gate_state(spark, idx, corp_dir):
+    from dataweb_spark.functions.dedup_index import compact_index
+
+    compact_index(spark, idx)
+    return (_rows(spark.read.parquet(corp_dir).select("doc_id")),
+            _rows(spark.read.parquet(f"{idx}/fp")),
+            _rows(spark.read.parquet(f"{idx}/bands")))
+
+
+def _gate_run(spark, root, corpus, crash_at=None, monkeypatch=None):
+    """One gate drain of ``_gate_batch``; with ``crash_at``, that module
+    function fails on its first call, then the stream restarts from its
+    checkpoint. Returns the corpus ids and the compacted index rows."""
+    from dataweb_spark.functions import dedup_index as DI
+
+    idx, corp_dir = str(root / "idx"), str(root / "corpus")
+    landing, ck = str(root / "landing"), str(root / "ck")
+    build_dedup_index(corpus, idx)
+    corpus.write.parquet(corp_dir)
+    _gate_batch(spark).coalesce(1).write.parquet(landing)
+    if crash_at is not None:
+        real, fired = getattr(DI, crash_at), []
+
+        def fail_once(*args, **kwargs):
+            if not fired:
+                fired.append(crash_at)
+                raise RuntimeError(f"injected crash in {crash_at}")
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(DI, crash_at, fail_once)
+        with pytest.raises(Exception, match="injected crash"):
+            _drain(spark, landing, idx, corp_dir, ck, compact_every=1)
+        assert fired == [crash_at]
+    _drain(spark, landing, idx, corp_dir, ck, compact_every=1)
+    return _gate_state(spark, idx, corp_dir)
+
+
+@pytest.fixture(scope="module")
+def clean_gate_state(spark, corpus_and_batch, tmp_path_factory):
+    return _gate_run(spark, tmp_path_factory.mktemp("clean"),
+                     corpus_and_batch[0])
+
+
+@pytest.mark.parametrize("crash_at", [
+    "_concurrent_writes",   # after the staging write, before any append
+    "append_batch",         # after the corpus append, before the index's
+    "compact_index",        # after both appends, before the commit
+])
+def test_gate_crash_at_each_commit_point(spark, tmp_path, monkeypatch,
+                                         corpus_and_batch, clean_gate_state,
+                                         crash_at):
+    """A micro-batch that fails at any of the gate's commit points and is
+    replayed from the checkpoint leaves the corpus ids and the compacted
+    index exactly as a clean run does."""
+    got = _gate_run(spark, tmp_path, corpus_and_batch[0], crash_at,
+                    monkeypatch)
+    assert got == clean_gate_state
+
+
+def test_gate_leaves_no_cache_behind(spark, tmp_path, corpus_and_batch):
+    """After a multi-batch drain no persisted RDD was added and the SQL
+    CacheManager is empty: every materialization a micro-batch makes is
+    released before the next one."""
+    corpus, _ = corpus_and_batch
+    idx, corp_dir = str(tmp_path / "idx"), str(tmp_path / "corpus")
+    landing, ck = str(tmp_path / "landing"), str(tmp_path / "ck")
+    build_dedup_index(corpus, idx)
+    corpus.write.parquet(corp_dir)
+    for i, row in enumerate(_gate_batch(spark).collect()[2:5]):
+        spark.createDataFrame([row]).write.mode("append") \
+             .parquet(f"{landing}/b{i}")
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    q = _drain(spark, f"{landing}/*", idx, corp_dir, ck)
+    assert len([p for p in q.recentProgress if p.numInputRows]) == 3
+    assert set(jsc.getPersistentRDDs().keySet()) <= before
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
